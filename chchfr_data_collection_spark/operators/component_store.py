@@ -110,7 +110,6 @@ from .store_base import (
     StoreKernel,
     _UNSET,
     _iter_files,
-    observed_count,
 )
 
 # kept name: the byte bound below which tombstone sets broadcast
@@ -876,34 +875,6 @@ class ComponentStore(StoreKernel):
                         fs.delete(st.getPath(), True)
         return sorted(out)
 
-    def snapshot_to(self, dest_path: str) -> dict:
-        """Export a consistent, compliance-clean CLONE of the store to
-        a fresh path (the BatchAppendStore.snapshot_to contract on the
-        patch layout). What travels: every MARKED patch partition
-        verbatim-minus-tombstoned-node-rows (seq partitioning, markers,
-        and delta_ids preserved, so `labels(as_of_seq)` and `history()`
-        work on the clone) and the schema sidecar. What does not:
-        tombstoned nodes' BYTES (the export rewrites through the
-        tombstone anti-join — a clone of a store with standing
-        takedowns is byte-clean and starts with no tombstones), orphan
-        partitions of crashed applies, and stale intents. A forget()
-        landing on the source after the snapshot does not propagate:
-        clones are forks — list them in `forget_everywhere`.
-
-        Crash story: the schema sidecar is the clone's format marker
-        and is written only after markers land and a counted verify
-        passes, so a crash mid-export leaves a clone every read refuses
-        with 'rebootstrap required'; `_snapshot.json` (the completeness
-        attestation `snapshot_manifest()` returns) lands last. Recovery
-        is delete-and-retry (the destination must be fresh). Runs under
-        the SOURCE WriterLease so the export never captures a
-        half-landed apply or mid-compact state."""
-        from .lease import WriterLease
-
-        self._require_bootstrapped()
-        with WriterLease(self.spark, self.base_path):
-            return self._snapshot_locked(dest_path)
-
     def high_water(self) -> dict:
         """Last committed position (the highest marked patch seq or
         generation position — after a full fold the generation IS the
@@ -915,186 +886,77 @@ class ComponentStore(StoreKernel):
         ]
         return {"kind": "seq", "value": (max(vals) if vals else None)}
 
-    def _snapshot_locked(self, dest_path: str) -> dict:
-        """snapshot_to's body; the CALLER holds this store's
-        WriterLease (snapshot_everywhere's quiesce mode holds the
-        fleet's leases and calls this directly)."""
-        self._require_bootstrapped()
-        dest = dest_path.rstrip("/")
-        self._require_fresh_dest(dest)
-        clone = ComponentStore(self.spark, dest)
-        self._deleted_cache = _UNSET  # re-list under the lease
+    # -- snapshot / sync hooks (the procedure is StoreKernel's) ---------------
+
+    _require_ready = _require_bootstrapped
+
+    def _recover(self) -> None:
         self._recover_fold()  # finish/undo a crashed compact() first
         self._apply_expiry()  # sweep a crashed expire() first
-        self._vacuum_sweep()
+
+    def _export(self, clone, pin_batch) -> dict:
+        """snapshot_to on the patch layout. What travels: every MARKED
+        patch partition minus tombstoned-node rows (seq partitioning,
+        markers and delta_ids preserved, so `labels(as_of_seq)` and
+        `history()` work on the clone), the standing generations AS
+        generations (rows into the clone's gens relation, the ledger
+        verbatim — the clone keeps the same VACUUM spans and the
+        provenance sync's divergence gates read), the retention floor
+        and the schema sidecar. The sidecar is the clone's format
+        marker: written only after markers land and the counted verify
+        passes, so a crash mid-export leaves a clone every read refuses
+        with 'rebootstrap required'."""
         marked = self._marked()
         gens = self._generations()
-        fid_map = self._tombstone_fingerprints()
-        fids = sorted(fid_map)
-        rows = self._excl_deleted(self._patch_rows())
-        # one pass, not two: count the export on the write itself via
-        # an Observation instead of a separate rows.count() job (same
-        # single-pass change as the batch-store snapshot); read-back
-        # counts below still verify what landed
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        (
-            rows.observe(obs, F.count(F.lit(1)).alias("n"))
-            .hint("rebalance", "seq")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("seq")
-            .parquet(clone.assign_path)
+        rows = self._export_counted(
+            self._excl_deleted(self._patch_rows()),
+            clone.assign_path,
+            ["seq"],
+            self._read_schema(),
         )
-        expected = observed_count(obs)
-        # a fully-masked export writes no files; the dir must still
-        # exist so the clone's schema-pinned reads resolve as empty
-        dfs, DP = self._fs_for(clone.assign_path)
-        dfs.mkdirs(DP(clone.assign_path))
-        got = (
-            self.spark.read.schema(self._read_schema())
-            .parquet(clone.assign_path)
-            .count()
-        )
-        # generations travel AS generations — rows (tombstone-masked)
-        # into the clone's gens relation, the ledger verbatim — so the
-        # clone keeps the same VACUUM spans (`labels(as_of)` inside a
-        # folded range refuses on the clone exactly as on the source)
-        # and the same provenance for sync's divergence gates.
         if gens:
-            grows = self._excl_deleted(self._gen_rows(gens)).select(
-                "node", "component", self._seq_to_gid(gens).alias("gid")
+            rows += self._export_counted(
+                self._masked_gen_rows(gens),
+                clone.gens_path,
+                ["gid"],
+                self._gid_read_schema(),
             )
-            gobs = Observation()
-            (
-                grows.observe(gobs, F.count(F.lit(1)).alias("n"))
-                .hint("rebalance", "gid")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("gid")
-                .parquet(clone.gens_path)
-            )
-            expected += observed_count(gobs)
-            clone._write_json(
-                clone.gens_ledger_path, {"generations": gens}
-            )
-            got += (
-                self.spark.read.schema(self._gid_read_schema())
-                .parquet(clone.gens_path)
-                .count()
-            )
-        if got != expected:
-            raise IOError(
-                f"snapshot row mismatch exporting {self.base_path} "
-                f"-> {dest}: expected {expected}, staged {got}; the "
-                "destination has no schema sidecar (unreadable) — "
-                "delete it and snapshot again"
-            )
+            clone._write_json(clone.gens_ledger_path, {"generations": gens})
         for seq, did in sorted(marked.items()):
             clone._mark(seq, did)
-        # the retention floor travels: the clone refuses the same
-        # as-of points and keeps the same earliest readable seq
         exp = self._read_json(self.expired_ledger_path)
         if exp is not None:
             clone._write_json(clone.expired_ledger_path, exp)
-        clone._write_json(
-            clone.schema_path, self._read_schema().jsonValue()
-        )
-        manifest = {
-            "source": self.base_path,
+        clone._write_json(clone.schema_path, self._read_schema().jsonValue())
+        return {
             "history": [[s, d] for s, d in self.history()],
-            "rows": got,
-            "tombstones_applied": fids,
-            "tombstone_fingerprints": fid_map,
-            "high_water": self.high_water(),
+            "rows": rows,
         }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {**manifest, "dest": dest}
 
-    def sync_to(self, dest_path: str) -> dict:
-        """INCREMENTAL backup of the patch store (the
-        BatchAppendStore.sync_to contract on this layout): ship only
-        the marked patch partitions the clone lacks (masked through
-        the CURRENT tombstones — no forgotten bytes travel), mark them
-        on the clone after the write commits (a crashed sync leaves
-        them invisible; the re-run replaces them via dynamic
-        overwrite), mirror the standing tombstones per forget_id, and
-        rewrite the attestation manifest LAST. Rows forgotten after
-        the original snapshot already sit in the clone's older patches
-        as bytes: the mirrored tombstones mask them immediately;
-        `compact(purge_forgotten=True)` on the clone erases them.
-
-        Refuses a destination that is not a clone of this store: no
-        snapshot attestation, or marked (seq, delta_id) entries the
-        source does not hold — which is also what a source-side
-        compact() since the snapshot looks like (the fold retired
-        those seqs): history was collapsed, take a fresh snapshot."""
-        from .lease import WriterLease
-
-        self._require_bootstrapped()
-        with WriterLease(self.spark, self.base_path):
-            return self._sync_locked(dest_path)
-
-    def _sync_locked(self, dest_path: str) -> dict:
-        """sync_to's body; the CALLER holds this store's
-        WriterLease (sync_everywhere's quiesce mode holds the
-        fleet's leases and calls this directly)."""
-        self._require_bootstrapped()
-        dest = dest_path.rstrip("/")
-        clone = ComponentStore(self.spark, dest)
-        if clone.snapshot_manifest() is None:
-            raise RuntimeError(
-                f"sync_to(): {dest} has no snapshot attestation — sync "
-                "only updates a completed snapshot_to() clone; take a "
-                "full snapshot first"
-            )
-        self._deleted_cache = _UNSET
-        # identity gate: the manifest records which store the clone
-        # was exported from — (seq, delta_id) overlap alone is not
-        # an identity (round-12 ADVICE, medium, on the batch
-        # stores; same discipline here)
-        prior = clone.snapshot_manifest()
-        recorded = prior.get("source")
-        if recorded != self.base_path:
-            raise RuntimeError(
-                f"sync_to(): the clone at {dest} was exported from "
-                f"{recorded!r}, not from {self.base_path} — syncing "
-                "into another store's clone would merge unrelated "
-                "corpora. Snapshot THIS store to a fresh path."
-            )
-        self._tombstone_narrowing_gate(prior, dest)
-        self._recover_fold()  # finish/undo a crashed compact() first
-        self._apply_expiry()  # sweep a crashed expire() first
-        self._vacuum_sweep()
-        # retention-floor gate (the batch-store discipline): a clone
-        # whose floor is ahead would have patches below it re-shipped
-        # and re-served — resurrecting retired rows on the replica
-        src_exp = self._read_json(self.expired_ledger_path)
-        clone_exp = clone._read_json(clone.expired_ledger_path)
-        src_floor = int(src_exp["before"]) if src_exp is not None else None
-        clone_floor = (
-            int(clone_exp["before"]) if clone_exp is not None else None
+    def _masked_gen_rows(self, gens: list) -> DataFrame:
+        """(node, component, gid) rows of `gens` minus tombstoned nodes
+        — generations travel AS generations, into the clone's gens
+        relation."""
+        return self._excl_deleted(self._gen_rows(gens)).select(
+            "node", "component", self._seq_to_gid(gens).alias("gid")
         )
-        if clone_floor is not None and (
-            src_floor is None or clone_floor > src_floor
-        ):
-            raise RuntimeError(
-                f"sync_to(): the clone at {dest} has a retention floor "
-                f"({clone_floor}) ahead of the source's ({src_floor}) "
-                "— patches the source still holds would resurrect on "
-                "the replica. Expire the source to the clone's "
-                "boundary first, or take a fresh snapshot."
-            )
+
+    def _ship_missing(self, clone, prior) -> tuple:
+        """sync_to on the patch layout: ship the marked patches and the
+        generations the clone lacks, masked through the current
+        tombstones; patches are marked on the clone after their write
+        commits, generations commit with the ledger rewrite. Refuses a
+        clone whose generations diverge from the source's (it compacted
+        itself along different boundaries) or that holds committed
+        positions the source does not — which is also what a source
+        compact() or expire() since the snapshot looks like."""
+        dest = clone.base_path
         marked = self._marked()
         src_gens = self._generations()
         clone_gens = clone._generations()
-        # generation-membership gate (round-14 sync hardening, now
-        # load-bearing on this layout too): a generation id names ONE
-        # fold event — the same gid on both sides with divergent
-        # position or patch membership, or the same position held by
-        # two different fold events, is a diverged clone (it compacted
-        # itself along different boundaries), not a stale one.
+        # generation-membership gate: a gid names ONE fold event — the
+        # same gid with divergent position or patch membership, or the
+        # same position held by two fold events, is a diverged clone
         src_by_gid = {g["gid"]: g for g in src_gens}
         src_by_pos = {int(g["gseq"]): g for g in src_gens}
         for cg in clone_gens:
@@ -1115,7 +977,7 @@ class ComponentStore(StoreKernel):
                 )
         # positions: patches by marker, generations by ledger — one
         # coordinate space on each side
-        src_pos = {s: d for s, d in marked.items()}
+        src_pos = dict(marked)
         src_pos.update({int(g["gseq"]): g["gid"] for g in src_gens})
         have = dict(clone._marked())
         have.update({int(g["gseq"]): g["gid"] for g in clone_gens})
@@ -1132,68 +994,45 @@ class ComponentStore(StoreKernel):
                 "retry)."
             )
         missing = sorted(set(src_pos) - set(have))
-        missing_patches = [s for s in missing if s in marked]
-        missing_gens = [g for g in src_gens if int(g["gseq"]) in set(missing)]
-        if missing_patches:
-            rows = self._excl_deleted(
-                self._patch_rows().filter(
-                    F.col("seq").isin([f"{s:08d}" for s in missing_patches])
-                )
+        patches = [s for s in missing if s in marked]
+        new_gens = [g for g in src_gens if int(g["gseq"]) in set(missing)]
+        if patches:
+            self._ship(
+                [f"{clone.assign_path}/seq={s:08d}" for s in patches],
+                self._excl_deleted(
+                    self._patch_rows().filter(
+                        F.col("seq").isin([f"{s:08d}" for s in patches])
+                    )
+                ),
+                clone.assign_path,
+                ["seq"],
             )
-            (
-                rows.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("seq")
-                .parquet(clone.assign_path)
-            )
-            for s in missing_patches:
+            for s in patches:
                 clone._mark(s, marked[s])
-        if missing_gens:
-            grows = self._excl_deleted(self._gen_rows(missing_gens)).select(
-                "node",
-                "component",
-                self._seq_to_gid(missing_gens).alias("gid"),
-            )
-            (
-                grows.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("gid")
-                .parquet(clone.gens_path)
+        if new_gens:
+            self._ship(
+                [clone._gen_dir(g["gid"]) for g in new_gens],
+                self._masked_gen_rows(new_gens),
+                clone.gens_path,
+                ["gid"],
             )
             # ledger rewrite is the gens' commit point on the clone too
-            clone._write_json(
-                clone.gens_ledger_path, {"generations": src_gens}
-            )
+            clone._write_json(clone.gens_ledger_path, {"generations": src_gens})
         # the retention floor travels (the foreign gate above already
         # proved the clone holds nothing below it)
-        if src_exp is not None:
-            clone._write_json(clone.expired_ledger_path, src_exp)
-        fids = self._tombstone_fingerprints()
-        for fid in sorted(fids):
-            ids = self.spark.read.parquet(
-                f"{self.deleted_path}/forget_id={fid}"
-            ).select(self.TOMBSTONE_KEY)
-            clone.forget(ids, fid)
-        manifest = {
-            "source": self.base_path,
-            "history": [[s, d] for s, d in self.history()],
-            # same meaning as snapshot_to's "rows": raw staged
-            # committed rows on the clone — NOT the resolved
-            # per-node serving view, which would give the one
-            # attestation field two meanings depending on which
-            # writer last touched it (round-12 ADVICE, low)
-            "rows": clone._assign_marked().count(),
-            "tombstones_applied": [],
-            "tombstones_mirrored": sorted(fids),
-            "tombstone_fingerprints": fids,
-            "high_water": self.high_water(),
-        }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {
-            **manifest,
-            "dest": dest,
-            "patches_shipped": [[s, src_pos[s]] for s in missing],
-        }
+        exp = self._read_json(self.expired_ledger_path)
+        if exp is not None:
+            clone._write_json(clone.expired_ledger_path, exp)
+        return (
+            {
+                "history": [[s, d] for s, d in self.history()],
+                # same meaning as snapshot_to's "rows": raw staged
+                # committed rows on the clone — NOT the resolved
+                # per-node serving view (round-12 ADVICE, low)
+                "rows": clone._assign_marked().count(),
+            },
+            {"patches_shipped": [[s, src_pos[s]] for s in missing]},
+        )
 
     def _tier_pull(self, reals: list, gens: list, merge_ratio) -> list:
         """The LSM size-tier walk on the seq layout (the

@@ -145,7 +145,6 @@ from .store_base import (
     StoreKernel,
     _UNSET,
     _iter_files,
-    observed_count,
 )
 
 MH_P = (1 << 61) - 1
@@ -1009,40 +1008,6 @@ class MinHashIndex(StoreKernel):
 
     # -- lifecycle -------------------------------------------------------------
 
-    def snapshot_to(self, dest_path: str) -> dict:
-        """Export a consistent, compliance-clean CLONE of the index to
-        a fresh path (the BatchAppendStore.snapshot_to contract on the
-        MinHash layout). What travels: every MARKED delta partition of
-        arrays/ and postings/ and every landed pairs/ snapshot —
-        delta_id partitioning, landed markers, the pairs write log
-        (seq entries AND the high-water mark, so `history()` /
-        `pairs_as_of()` work on the clone and its future seqs never
-        collide with exported history), the `_folded` tombstones (a
-        late retry of a folded delta_id refuses on the clone exactly as
-        on the source), and the schema sidecars. What does not:
-        tombstoned docs' BYTES — arrays/postings rows are rewritten
-        through the doc_id anti-join and pairs rows are dropped when
-        EITHER endpoint is tombstoned (the compact(purge) masking), so
-        the clone is byte-clean and starts with no tombstones; unmarked
-        partitions (a mid-flight or crashed insert) are excluded as
-        fold sources would exclude them. Takedowns landing after the
-        snapshot do not propagate: clones are forks — list them in
-        `forget_everywhere`.
-
-        Refuses while a fold manifest is pending (compact() crashed or
-        running) — the honest answer for an export is 'recover first',
-        exactly as for pairs_as_of(). Crash story: the format marker is
-        written LAST-but-one, so a half-exported clone refuses every
-        read with 'rebootstrap required'; `_snapshot.json` (the
-        attestation `snapshot_manifest()` returns) lands last; recovery
-        is delete-and-retry. Runs under the SOURCE WriterLease so no
-        insert/compact mutates the export mid-copy."""
-        from .lease import WriterLease
-
-        self._require_format()
-        with WriterLease(self.spark, self.base_path):
-            return self._snapshot_locked(dest_path)
-
     def high_water(self) -> dict:
         """Last committed position (the pairs write log's highest
         seq) — the fleet-catalog skew mark (round-12 verdict, next
@@ -1053,147 +1018,123 @@ class MinHashIndex(StoreKernel):
             "value": (max(entries) if entries else None),
         }
 
-    def _snapshot_locked(self, dest_path: str) -> dict:
-        """snapshot_to's body; the CALLER holds this index's
-        WriterLease (snapshot_everywhere's quiesce mode holds the
-        fleet's leases and calls this directly)."""
-        self._require_format()
-        dest = dest_path.rstrip("/")
-        self._require_fresh_dest(dest)
-        clone = MinHashIndex(self.spark, dest)
-        if (
-            self._read_json(self.fold_commit_path) is not None
-            or self._read_json(self.fold_intent_path) is not None
-        ):
-            raise RuntimeError(
-                f"snapshot_to(): a fold manifest is pending on "
-                f"{self.base_path} (compact() crashed or is "
-                "running) — run compact() to recover, then retry."
-            )
-        self._deleted_cache = _UNSET  # re-list under the lease
+    # -- snapshot / sync hooks (the procedure is StoreKernel's) ---------------
+
+    _require_ready = _require_format
+
+    _REL_PARTS = {
+        "arrays": ("delta_id",),
+        "postings": ("band", "delta_id"),
+        "pairs": ("delta_id",),
+    }
+
+    def _recover(self) -> None:
+        self._recover_fold()  # finish/undo a crashed compact() first
         self._recover_expiry()  # sweep a crashed expire() first
-        self._vacuum_sweep()
-        fid_map = self._tombstone_fingerprints()
-        fids = sorted(fid_map)
+
+    def _retention_ahead(self, clone):
+        """Deltas the clone expired that the source still holds — they
+        would be RE-SHIPPED, landing retired data back under retired
+        ids the clone's own expired markers hide."""
+        ahead = sorted(
+            clone._landed_ids(clone.expired_path)
+            - self._landed_ids(self.expired_path)
+        )
+        return f"expired deltas {ahead}" if ahead else None
+
+    def _export(self, clone, pin_batch) -> dict:
+        """snapshot_to on the MinHash layout. What travels: every
+        MARKED delta partition of arrays/ and postings/ and every
+        landed pairs/ snapshot — delta_id partitioning, landed markers,
+        the pairs write log (seq entries AND the high-water mark, so
+        `history()` / `pairs_as_of()` work on the clone and its future
+        seqs never collide with exported history), the `_folded`
+        tombstones, the retention markers and the schema sidecars.
+        Index rows are rewritten through the doc_id anti-join and pairs
+        rows are dropped when EITHER endpoint is tombstoned; unmarked
+        partitions (a mid-flight or crashed insert) are excluded. The
+        format marker is written last-but-one, so a half-exported clone
+        refuses every read with 'rebootstrap required'."""
         deleted, small = self._deleted_docs()
         if deleted is not None:
             deleted = deleted.persist()
+        # markers and log entries travel for EVERY landed delta — a
+        # zero-row delta (an insert or probe whose masked output was
+        # empty writes no partition) still owns its marker and its log
+        # seq, and dropping them would fork the clone's history; only
+        # the DATA ship is restricted to deltas that have partitions
         idx_marked = self._landed_ids(self.landed_path)
-        # markers and log entries travel for EVERY landed delta —
-        # a zero-row delta (an insert or probe whose masked output
-        # was empty writes no partition) still owns its marker and
-        # its log seq, and dropping them would fork the clone's
-        # history; only the DATA ship is restricted to deltas that
-        # actually have partitions
         pairs_marked = self._landed_ids(self.landed_pairs_path)
-        pairs_live = sorted(pairs_marked & self._partition_ids("pairs"))
+        dfs, HPath = self._fs_for(clone.base_path)
         rows: dict = {}
         try:
-            fs, HPath = self._fs()
-            dfs, _ = self._fs_for(dest)
             for rel in ("arrays", "postings", "pairs"):
-                if rel == "pairs":
-                    land = pairs_live
-                    schema = self._pairs_read_schema()
-                else:
-                    land = sorted(
-                        idx_marked & self._partition_ids(rel)
-                    )
-                    schema = self._rel_schema(rel)
-                dst = clone._rel_path(rel)
+                marked = pairs_marked if rel == "pairs" else idx_marked
+                land = sorted(marked & self._partition_ids(rel))
+                rows[rel] = 0
                 if not land:
-                    dfs.mkdirs(HPath(dst))
-                    rows[rel] = 0
+                    dfs.mkdirs(HPath(clone._rel_path(rel)))
                     continue
-                df = (
-                    self.spark.read.schema(schema)
-                    .parquet(self._rel_path(rel))
-                    .where(F.col("delta_id").isin(land))
+                df, schema = self._rel_export(rel, land, deleted, small)
+                rows[rel] = self._export_counted(
+                    df, clone._rel_path(rel), self._REL_PARTS[rel], schema
                 )
-                df = self._mask_deleted(df, rel, deleted, small)
-                parts = (
-                    ("band", "delta_id")
-                    if rel == "postings"
-                    else ("delta_id",)
-                )
-                # one pass, not two: count the exported rows with an
-                # Observation ON the write instead of a separate
-                # `df.count()` job re-running the masked read; the
-                # read-back count below still verifies what landed
-                # (same single-pass change as the batch-store snapshot)
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                (
-                    df.observe(obs, F.count(F.lit(1)).alias("n"))
-                    .hint("rebalance", *parts)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "static")
-                    .partitionBy(*parts)
-                    .parquet(dst)
-                )
-                expected = observed_count(obs)
-                dfs.mkdirs(HPath(dst))
-                got = (
-                    self.spark.read.schema(schema).parquet(dst).count()
-                )
-                if got != expected:
-                    raise IOError(
-                        f"snapshot row mismatch exporting {rel} of "
-                        f"{self.base_path} -> {dest}: expected "
-                        f"{expected}, staged {got}; the destination "
-                        "has no format marker (unreadable) — delete "
-                        "it and snapshot again"
-                    )
-                rows[rel] = got
         finally:
             if deleted is not None:
                 deleted.unpersist()
-        # markers, write log, folded tombstones, sidecars — then the
-        # format marker flips the clone readable, manifest attests
         for did in sorted(idx_marked):
             clone._mark_landed(clone.landed_path, did)
         log = self._log_entries()
         for seq, did in sorted(log.items()):
             if did in pairs_marked:
-                dfs.create(
-                    HPath(f"{clone.log_path}/{seq:08d}.{did}"), True
-                ).close()
+                clone._mark_landed(clone.log_path, f"{seq:08d}.{did}")
         for did in sorted(pairs_marked):
             clone._mark_landed(clone.landed_pairs_path, did)
-        hwm = self._read_json(self.log_hwm_path)
-        if hwm is not None:
-            clone._write_json(clone.log_hwm_path, hwm)
-        for did in sorted(self._landed_ids(self.folded_path)):
-            clone._mark_landed(clone.folded_path, did)
-        # retention markers travel: the clone refuses the same retired
-        # re-inserts (expired deltas' DATA never travels — they are
-        # not landed)
-        for did in sorted(self._landed_ids(self.expired_path)):
-            clone._mark_landed(clone.expired_path, did)
+        self._carry_lifecycle_markers(clone)
         for rel in ("postings", "arrays"):
             clone._write_json(
-                clone.schema_paths[rel],
-                self._rel_schema(rel).jsonValue(),
+                clone.schema_paths[rel], self._rel_schema(rel).jsonValue()
             )
         clone._write_format_marker()
-        manifest = {
-            "source": self.base_path,
+        return {
             "rows": rows,
             "index_deltas": sorted(idx_marked),
             "index_delta_fps": {
-                did: self._index_delta_fp(did)
-                for did in sorted(idx_marked)
+                did: self._index_delta_fp(did) for did in sorted(idx_marked)
             },
             "pairs_history": [
                 [s, d] for s, d in sorted(log.items()) if d in pairs_marked
             ],
-            "tombstones_applied": fids,
-            "tombstone_fingerprints": fid_map,
-            "high_water": self.high_water(),
         }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {**manifest, "dest": dest}
+
+    def _carry_lifecycle_markers(self, clone) -> None:
+        """Copy the pairs-log high-water mark, the `_folded` tombstones
+        (a late retry of a folded delta_id refuses on the clone exactly
+        as on the source) and the retention markers (the clone refuses
+        the same retired re-inserts; expired deltas' DATA never travels
+        — they are not landed)."""
+        hwm = self._read_json(self.log_hwm_path)
+        if hwm is not None:
+            clone._write_json(clone.log_hwm_path, hwm)
+        for src, dst in (
+            (self.folded_path, clone.folded_path),
+            (self.expired_path, clone.expired_path),
+        ):
+            for did in sorted(self._landed_ids(src)):
+                clone._mark_landed(dst, did)
+
+    def _rel_export(self, rel: str, dids, deleted, small: bool):
+        """(the masked rows of `dids` in `rel`, the relation's pinned
+        read schema) — what snapshot and sync ship."""
+        schema = (
+            self._pairs_read_schema() if rel == "pairs" else self._rel_schema(rel)
+        )
+        df = (
+            self.spark.read.schema(schema)
+            .parquet(self._rel_path(rel))
+            .where(F.col("delta_id").isin(dids))
+        )
+        return self._mask_deleted(df, rel, deleted, small), schema
 
     def _mask_deleted(self, df, rel: str, deleted, small: bool):
         """Anti-join tombstoned docs out of an export frame — pairs on
@@ -1228,276 +1169,135 @@ class MinHashIndex(StoreKernel):
                 )
         return sorted(out)
 
-    def sync_to(self, dest_path: str) -> dict:
-        """INCREMENTAL backup of the index (the BatchAppendStore
-        .sync_to contract on the MinHash layout): ship only the landed
-        delta partitions the clone lacks — arrays/postings keyed by the
-        index markers, pairs by the pairs markers, each masked through
-        the CURRENT tombstones (no forgotten bytes travel) and marked
-        on the clone only after its write commits (a crashed sync
-        leaves invisible partials; the re-run replaces them via the
-        pre-delete + dynamic overwrite every delta landing uses).
-        Write-log entries ship with their pairs deltas, the high-water
-        mark and `_folded` tombstones refresh, standing takedowns are
-        MIRRORED per forget_id (masked on the clone now, byte-erased at
-        the clone's own compact(purge_forgotten=True)), and the
-        attestation manifest is rewritten LAST.
+    def _ship_deltas(self, clone, rel: str, dids, deleted, small) -> None:
+        """Ship `dids` of `rel` through the kernel's ship primitive: the
+        clone's copies are deleted (a prior crashed sync's partials, or
+        a re-delivered delta's stale rows), then the masked rows of the
+        deltas that have partitions land."""
+        present = sorted(set(dids) & self._partition_ids(rel))
+        self._ship(
+            [d for did in dids for d in clone._delta_dirs(rel, did)],
+            self._rel_export(rel, present, deleted, small)[0]
+            if present
+            else None,
+            clone._rel_path(rel),
+            self._REL_PARTS[rel],
+        )
 
-        Refuses while a fold manifest is pending, and refuses a
-        destination that is not a clone: no attestation, or landed
-        deltas the source does not hold — which is also what a
-        source-side compact() since the snapshot looks like (the fold
-        retired those deltas' markers): history was collapsed into a
-        generation the clone's deltas duplicate row-by-row, so merging
-        would double-count. Take a fresh snapshot after a fold."""
-        from .lease import WriterLease
-
-        self._require_format()
-        with WriterLease(self.spark, self.base_path):
-            return self._sync_locked(dest_path)
-
-    def _sync_locked(self, dest_path: str) -> dict:
-        """sync_to's body; the CALLER holds this index's
-        WriterLease (sync_everywhere's quiesce mode holds the
-        fleet's leases and calls this directly)."""
-        self._require_format()
-        dest = dest_path.rstrip("/")
-        clone = MinHashIndex(self.spark, dest)
-        if clone.snapshot_manifest() is None:
-            raise RuntimeError(
-                f"sync_to(): {dest} has no snapshot attestation — sync "
-                "only updates a completed snapshot_to() clone; take a "
-                "full snapshot first"
-            )
-        if (
-            self._read_json(self.fold_commit_path) is not None
-            or self._read_json(self.fold_intent_path) is not None
+    def _ship_missing(self, clone, prior) -> tuple:
+        """sync_to on the MinHash layout: ship the landed deltas the
+        clone lacks — arrays/postings keyed by the index markers, pairs
+        by the pairs markers — plus deltas the source RE-DELIVERED since
+        the last export (same delta_id, rewritten content: detected by
+        the manifest's recorded index fingerprints and by moved pairs
+        log seqs). Each is marked on the clone only after its writes
+        commit; write-log entries ship with their pairs deltas; the
+        high-water mark, `_folded` tombstones and retention markers
+        refresh. Refuses, before any clone mutation, a clone holding
+        landed deltas the source does not — which is also what a
+        source compact() since the snapshot looks like (the fold
+        retired those deltas' markers into a generation the clone's
+        deltas duplicate row-by-row)."""
+        dest = clone.base_path
+        src_idx = self._landed_ids(self.landed_path)
+        src_pairs = self._landed_ids(self.landed_pairs_path)
+        clone_idx = clone._landed_ids(clone.landed_path)
+        clone_pairs = clone._landed_ids(clone.landed_pairs_path)
+        for what, have, src in (
+            ("index", clone_idx, src_idx),
+            ("pairs", clone_pairs, src_pairs),
         ):
-            raise RuntimeError(
-                f"sync_to(): a fold manifest is pending on "
-                f"{self.base_path} (compact() crashed or is "
-                "running) — run compact() to recover, then retry."
-            )
-        self._deleted_cache = _UNSET
-        self._recover_expiry()  # sweep a crashed expire() first
-        self._vacuum_sweep()
+            foreign = sorted(have - src)
+            if foreign:
+                raise RuntimeError(
+                    f"sync_to(): {dest} holds landed {what} deltas "
+                    f"{foreign} the source {self.base_path} does not — "
+                    "the clone diverged, a source compact() folded "
+                    "that history (fresh snapshot), or a source "
+                    "expire() retired it (expire the same delta_ids on "
+                    "the clone, then retry)."
+                )
+        # fingerprinting cost, stated: O(landed deltas) metadata
+        # listings per sync — the same class every probe's partition
+        # glob already pays, kept small by compact()
+        cur_fps = {did: self._index_delta_fp(did) for did in sorted(src_idx)}
+        # a RE-DELIVERED delta is invisible to the marker diff — the
+        # manifest's recorded fingerprints detect it. A manifest from
+        # before the fingerprints existed can't compare: shared deltas
+        # count as unchanged for THIS sync (no mass re-ship); the
+        # manifest written now records fps, so detection engages next
+        idx_changed = sorted(
+            did
+            for did in (src_idx & clone_idx)
+            if "index_delta_fps" in prior
+            and prior["index_delta_fps"].get(did) != cur_fps[did]
+        )
+        idx_to_ship = sorted((src_idx - clone_idx) | set(idx_changed))
+        # a pairs retry re-lands under a FRESH seq: a shared delta whose
+        # log seq moved was re-delivered — re-ship rows and log entry
+        log = self._log_entries()
+        src_seq = {d: s for s, d in log.items()}
+        clone_seq = {d: s for s, d in clone._log_entries().items()}
+        pairs_changed = sorted(
+            did
+            for did in (src_pairs & clone_pairs)
+            if clone_seq.get(did) != src_seq.get(did)
+        )
+        pairs_to_ship = sorted((src_pairs - clone_pairs) | set(pairs_changed))
         deleted, small = self._deleted_docs()
         if deleted is not None:
             deleted = deleted.persist()
-        shipped: dict = {}
         try:
-            fs, HPath = self._fs()
-            dfs, _ = self._fs_for(dest)
-            src_idx = self._landed_ids(self.landed_path)
-            src_pairs = self._landed_ids(self.landed_pairs_path)
-            prior = clone.snapshot_manifest()
-            # identity gate: delta-id overlap alone is not an
-            # identity (round-12 ADVICE, medium, on the batch
-            # stores; delta_ids here are usually unique strings but
-            # "bootstrap" is a universal default — same discipline)
-            recorded = prior.get("source")
-            if recorded != self.base_path:
-                raise RuntimeError(
-                    f"sync_to(): the clone at {dest} was exported "
-                    f"from {recorded!r}, not from {self.base_path} "
-                    "— syncing into another store's clone would "
-                    "merge unrelated corpora. Snapshot THIS index "
-                    "to a fresh path."
-                )
-            self._tombstone_narrowing_gate(prior, dest)
-            prior_fps = prior.get("index_delta_fps", {})
-            # retention gate (the batch-store floor gate on the
-            # delta-keyed layout): a clone that expired deltas the
-            # source still holds would have them RE-SHIPPED below —
-            # landing retired data back under retired ids while the
-            # clone's own expired markers exclude it from reads (an
-            # attested-but-invisible mess). The reverse direction
-            # (source expired, clone still holds) surfaces as foreign
-            # clone deltas below, with the expire-the-clone remedy.
-            src_expired = self._landed_ids(self.expired_path)
-            ahead = sorted(
-                clone._landed_ids(clone.expired_path) - src_expired
-            )
-            if ahead:
-                raise RuntimeError(
-                    f"sync_to(): the clone at {dest} expired deltas "
-                    f"{ahead} the source {self.base_path} still holds "
-                    "— its retention is ahead; shipped deltas would "
-                    "resurrect retired data. Expire the same "
-                    "delta_ids on the source first, or take a fresh "
-                    "snapshot."
-                )
-
-            def _refuse_foreign(have: set, src: set, what: str):
-                foreign = sorted(have - src)
-                if foreign:
-                    raise RuntimeError(
-                        f"sync_to(): {dest} holds landed {what} "
-                        f"deltas {foreign} the source "
-                        f"{self.base_path} does not — the clone "
-                        "diverged, a source compact() folded that "
-                        "history (fresh snapshot), or a source "
-                        "expire() retired it (expire the same "
-                        "delta_ids on the clone, then retry)."
-                    )
-
-            def _ship(rel, dids):
-                """Pre-delete the clone's copies of these deltas (a
-                prior crashed sync's partials, or a re-delivered
-                delta's stale rows), then land the masked rows."""
-                for did in dids:
-                    for d in clone._delta_dirs(rel, did):
-                        dfs.delete(HPath(d), True)
-                present = sorted(
-                    set(dids) & self._partition_ids(rel)
-                )
-                if not present:
-                    return
-                schema = (
-                    self._pairs_read_schema()
-                    if rel == "pairs"
-                    else self._rel_schema(rel)
-                )
-                df = self._mask_deleted(
-                    self.spark.read.schema(schema)
-                    .parquet(self._rel_path(rel))
-                    .where(F.col("delta_id").isin(present)),
-                    rel,
-                    deleted,
-                    small,
-                )
-                parts = (
-                    ("band", "delta_id")
-                    if rel == "postings"
-                    else ("delta_id",)
-                )
-                (
-                    df.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*parts)
-                    .parquet(clone._rel_path(rel))
-                )
-
-            # ---- index relations (arrays + postings move as one) --
-            clone_idx = clone._landed_ids(clone.landed_path)
-            _refuse_foreign(clone_idx, src_idx, "index")
-            # fingerprinting cost, stated: O(landed deltas) metadata
-            # listings per sync — the same asymptotic class every
-            # probe's partition glob already pays, and compact()
-            # keeps the landed-delta count small by the store's own
-            # lifecycle contract
-            cur_fps = {
-                did: self._index_delta_fp(did) for did in sorted(src_idx)
-            }
-            # a RE-DELIVERED delta (same id, content rewritten by an
-            # insert retry since the last export) is invisible to
-            # the marker diff — the manifest's recorded source
-            # fingerprints are what detect it. A manifest from
-            # before the fingerprints existed can't make the
-            # comparison: treat shared deltas as unchanged for THIS
-            # sync (the pre-fingerprint code's own blind spot, one
-            # last time) rather than mass re-shipping the corpus;
-            # the manifest written below records fps, so detection
-            # engages from the next sync on.
-            legacy = "index_delta_fps" not in prior
-            idx_changed = [] if legacy else sorted(
-                did
-                for did in (src_idx & clone_idx)
-                if prior_fps.get(did) != cur_fps[did]
-            )
-            idx_to_ship = sorted((src_idx - clone_idx) | set(idx_changed))
-            shipped["index"] = idx_to_ship
-            shipped["index_redelivered"] = idx_changed
-            # retract markers of re-shipped deltas while their rows
-            # are mid-rewrite, land BOTH relations, then re-mark —
-            # the insert flow's mark-after-both-writes discipline
+            # retract markers of re-shipped deltas while their rows are
+            # mid-rewrite, land BOTH relations, then re-mark — the
+            # insert flow's mark-after-both-writes discipline
             for did in idx_to_ship:
                 clone._unmark_landed(clone.landed_path, did)
-            for rel in ("arrays", "postings"):
-                if idx_to_ship:
-                    _ship(rel, idx_to_ship)
+            if idx_to_ship:
+                for rel in ("arrays", "postings"):
+                    self._ship_deltas(clone, rel, idx_to_ship, deleted, small)
             for did in idx_to_ship:
                 clone._mark_landed(clone.landed_path, did)
-
-            # ---- pairs (+ write log) ------------------------------
-            clone_pairs = clone._landed_ids(clone.landed_pairs_path)
-            _refuse_foreign(clone_pairs, src_pairs, "pairs")
-            log = self._log_entries()
-            src_seq = {d: s for s, d in log.items()}
-            clone_seq = {d: s for s, d in clone._log_entries().items()}
-            # a pairs retry re-lands under a FRESH seq: a shared
-            # delta whose log seq moved was re-delivered — re-ship
-            # its rows and replace its log entry
-            pairs_changed = sorted(
-                did
-                for did in (src_pairs & clone_pairs)
-                if clone_seq.get(did) != src_seq.get(did)
-            )
-            pairs_to_ship = sorted(
-                (src_pairs - clone_pairs) | set(pairs_changed)
-            )
-            shipped["pairs"] = pairs_to_ship
-            shipped["pairs_redelivered"] = pairs_changed
             for did in pairs_to_ship:
                 clone._unmark_landed(clone.landed_pairs_path, did)
-                # direct delete via the already-listed clone log —
-                # _unlog_pairs would re-list the whole log per did
                 if did in clone_seq:
-                    dfs.delete(
-                        HPath(
-                            f"{clone.log_path}/"
-                            f"{clone_seq[did]:08d}.{did}"
-                        ),
-                        False,
+                    clone._unmark_landed(
+                        clone.log_path, f"{clone_seq[did]:08d}.{did}"
                     )
             if pairs_to_ship:
-                _ship("pairs", pairs_to_ship)
-            # log entries BEFORE the landed markers: a crash in
-            # between leaves an unmarked delta the re-run re-ships;
-            # the reverse order would leave a marked delta whose
-            # log entry never arrives
+                self._ship_deltas(clone, "pairs", pairs_to_ship, deleted, small)
+            # log entries BEFORE the landed markers: a crash in between
+            # leaves an unmarked delta the re-run re-ships; the reverse
+            # order would leave a marked delta whose log entry never
+            # arrives
             for did in pairs_to_ship:
                 if did in src_seq:
-                    dfs.create(
-                        HPath(
-                            f"{clone.log_path}/{src_seq[did]:08d}.{did}"
-                        ),
-                        True,
-                    ).close()
+                    clone._mark_landed(
+                        clone.log_path, f"{src_seq[did]:08d}.{did}"
+                    )
             for did in pairs_to_ship:
                 clone._mark_landed(clone.landed_pairs_path, did)
         finally:
             if deleted is not None:
                 deleted.unpersist()
-        hwm = self._read_json(self.log_hwm_path)
-        if hwm is not None:
-            clone._write_json(clone.log_hwm_path, hwm)
-        for did in sorted(self._landed_ids(self.folded_path)):
-            clone._mark_landed(clone.folded_path, did)
-        for did in sorted(src_expired):
-            clone._mark_landed(clone.expired_path, did)
-        fids = self._tombstone_fingerprints()
-        for fid in sorted(fids):
-            ids = self.spark.read.parquet(
-                f"{self.deleted_path}/forget_id={fid}"
-            ).select(self.TOMBSTONE_KEY)
-            clone.forget(ids, fid)
-        manifest = {
-            "source": self.base_path,
-            "index_deltas": sorted(src_idx),
-            "index_delta_fps": cur_fps,
-            "pairs_history": [
-                [s, d]
-                for s, d in sorted(self._log_entries().items())
-                if d in src_pairs
-            ],
-            "tombstones_applied": [],
-            "tombstones_mirrored": sorted(fids),
-            "tombstone_fingerprints": fids,
-            "high_water": self.high_water(),
-        }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {**manifest, "dest": dest, "shipped": shipped}
+        self._carry_lifecycle_markers(clone)
+        return (
+            {
+                "index_deltas": sorted(src_idx),
+                "index_delta_fps": cur_fps,
+                "pairs_history": [
+                    [s, d] for s, d in sorted(log.items()) if d in src_pairs
+                ],
+            },
+            {
+                "shipped": {
+                    "index": idx_to_ship,
+                    "index_redelivered": idx_changed,
+                    "pairs": pairs_to_ship,
+                    "pairs_redelivered": pairs_changed,
+                }
+            },
+        )
 
     def _pairs_read_schema(self):
         """The pinned pairs/ read schema incl. delta_id (the

@@ -10,14 +10,33 @@ that machinery; a fourth store would have copied it a fourth time.
 
 Everything here is BEHAVIOR-PRESERVING extraction: the store tests
 pin the contracts (tests/test_minhash_index.py, test_ivf_store.py,
-test_component_store.py) and ran green unchanged across the move.
+test_component_store.py, test_snapshot.py) and ran green unchanged
+across each move.
 
 Two layers:
 
-- `StoreKernel` — filesystem plumbing + the tombstone surface. A
-  subclass calls `_init_kernel(spark, base_path)` in its __init__ and
-  sets `TOMBSTONE_KEY` (the id column name) plus
+- `StoreKernel` — filesystem plumbing, the tombstone surface, the
+  fold-source vacuum, and the ONE snapshot/sync lifecycle every layout
+  runs. A subclass calls `_init_kernel(spark, base_path)` in its
+  __init__ and sets `TOMBSTONE_KEY` (the id column name) plus
   `_tombstone_key_type()` (the pinned id type tombstones are cast to).
+  The kernel's snapshot/sync skeleton: `snapshot_to` / `sync_to` take
+  the source WriterLease and call `_snapshot_locked` / `_sync_locked`
+  (the fleet coordinators' quiesce mode calls those directly), which
+  check the destination (fresh for a snapshot; attested, same source,
+  no narrowed takedown, retention not ahead for a sync), build the
+  clone handle, settle the source (crash recovery, expiry and vacuum
+  sweeps, tombstone re-list), run the layout's export or ship, mirror
+  tombstones (sync), and write the `_snapshot.json` attestation LAST.
+  Exports land through `_export_counted` (Observation-counted write +
+  read-back verify), sync ships through `_ship` (pre-delete the
+  clone's unit directories, then dynamic overwrite). Per-layout hooks:
+  `_require_ready()` (bootstrap/format gate), `_recover()` (crashed
+  maintenance), `_export(clone, pin_batch)` (what a snapshot carries ->
+  manifest fields), `_retention_ahead(clone)` (default: the
+  `_expired.json` floor), `_ship_missing(clone, prior)` (divergence
+  gates + what a sync carries -> manifest and receipt fields) and
+  `high_water()`.
 - `BatchAppendStore(StoreKernel)` — the micro-batch-append layout the
   streaming index-maintenance sinks land into: `DATA_SUBDIR/`
   partitioned by (*CELL_COLS, batch_id) with intent/landed markers per
@@ -521,6 +540,266 @@ class StoreKernel:
             self._deleted_cache = _UNSET
         return cleared
 
+    # -- snapshot / sync: one lifecycle under every layout ---------------------
+    #
+    # The kernel owns the procedure; the per-layout hooks are listed in
+    # the module docstring.
+
+    def _require_ready(self) -> None:
+        """Refuse a source that cannot be exported (layouts with a
+        bootstrap/format gate override)."""
+
+    def snapshot_to(self, dest_path: str, pin_batch: int | None = None) -> dict:
+        """Export a consistent, compliance-clean CLONE of the store to
+        a fresh path — the disaster-recovery / fork surface.
+
+        What travels: every COMMITTED unit (batch, patch, generation,
+        delta — in-flight and crashed writes are excluded exactly as
+        reads exclude them) with its partitioning, markers and write
+        log, so history and as-of reads work on the clone, plus the
+        layout's sidecars (trained geometry, schema, fold and
+        retention ledgers). What does NOT travel: tombstoned rows'
+        BYTES — the export rewrites the data through the tombstone
+        anti-join, so a clone of a store with standing takedowns is
+        byte-clean (you cannot "back up" data you were ordered to
+        erase) and starts with no tombstones. A forget() landing on
+        the source AFTER the snapshot does not propagate: clones are
+        forks — route takedowns through
+        `operators.takedown.forget_everywhere` with every live clone
+        listed.
+
+        Crash story: each layout keeps the clone unreadable (no landed
+        markers / no schema sidecar / no format marker) until a
+        counted verify of the staged rows passes; `_snapshot.json` is
+        written LAST and is the completeness attestation
+        (`snapshot_manifest()` — a restore should require it).
+        Recovery from a failed attempt is "delete the destination,
+        snapshot again" (the destination must be fresh). Runs under
+        the SOURCE WriterLease: a snapshot never races maintenance
+        into capturing a half-migrated state. Cost: one masked scan +
+        one write of the committed data, plus a read-back count.
+
+        `pin_batch=B` (batch-coordinate stores only) exports the store
+        AS OF batch B — only committed values at or below the pin
+        travel (a generation travels only when its WHOLE fold set is
+        <= B; a pin falling inside one refuses). The pin is what makes
+        a CONSISTENT fleet snapshot possible WITHOUT quiescing
+        (`snapshot_everywhere(pin_batches=True)`)."""
+        from .lease import WriterLease
+
+        self._require_ready()
+        with WriterLease(self.spark, self.base_path):
+            return self._snapshot_locked(dest_path, pin_batch=pin_batch)
+
+    def _snapshot_locked(
+        self, dest_path: str, pin_batch: int | None = None
+    ) -> dict:
+        """snapshot_to's body; the CALLER holds this store's
+        WriterLease (snapshot_everywhere's quiesce mode holds the whole
+        fleet's leases for the export window and calls this directly —
+        the lease is not re-entrant, so the public wrapper cannot be
+        used there)."""
+        self._require_ready()
+        if pin_batch is not None and self.high_water()["kind"] != "batch":
+            raise TypeError(
+                f"snapshot_to(pin_batch=...): {type(self).__name__} "
+                "positions are store-local — only batch-coordinate "
+                "stores export pinned"
+            )
+        dest = dest_path.rstrip("/")
+        self._require_fresh_dest(dest)
+        clone = self.__class__(self.spark, dest)
+        self._settle()
+        fid_map = self._tombstone_fingerprints()
+        manifest = {
+            "source": self.base_path,
+            "tombstones_applied": sorted(fid_map),
+            "tombstone_fingerprints": fid_map,
+            **self._export(clone, pin_batch),
+        }
+        # last committed position under the source lease — fleet
+        # catalogs record it so a restore can surface cross-store skew
+        manifest.setdefault("high_water", self.high_water())
+        clone._write_json(f"{dest}/_snapshot.json", manifest)
+        return {**manifest, "dest": dest}
+
+    def sync_to(self, dest_path: str) -> dict:
+        """INCREMENTAL backup: bring a previously-exported clone up to
+        date without re-exporting the corpus. Ships only the committed
+        units the clone lacks (or whose content the source re-delivered
+        since), masked through the CURRENT tombstones — no forgotten
+        bytes travel — and marks each on the clone only after its write
+        commits, so a crashed sync re-runs to completion (missing units
+        are recomputed from the diff; partially-landed ones are deleted
+        and replaced). Then MIRRORS the source's standing tombstones
+        onto the clone per forget_id (idempotent-by-replacement) and
+        rewrites the manifest LAST with the new attested history.
+
+        Honesty bound: rows forgotten on the source AFTER the original
+        snapshot already sit in the clone's older units as bytes — the
+        mirrored tombstones mask them immediately and the clone's own
+        purge erases them: a sync is "compliance-masked now, byte-clean
+        at the clone's next purge". Corollary: a source-side purge
+        BEFORE a sync clears the very tombstones the sync would have
+        mirrored, so the clone keeps serving rows the source already
+        erased. Route forgets through `forget_everywhere` with every
+        live clone listed, or purge the source only after its clones
+        are synced.
+
+        The clone must genuinely be a clone: a destination without a
+        snapshot manifest, exported from another store, holding
+        takedowns the source has since narrowed, with retention ahead
+        of the source's, or holding committed history the source never
+        had (the layout's divergence gates), is refused and left
+        untouched. Runs under the SOURCE WriterLease, like
+        snapshot_to. Cost: O(missing units) data + O(|tombstones|)
+        metadata — the nightly-backup shape snapshot_to is the full
+        backup of."""
+        from .lease import WriterLease
+
+        self._require_ready()
+        with WriterLease(self.spark, self.base_path):
+            return self._sync_locked(dest_path)
+
+    def _sync_locked(self, dest_path: str) -> dict:
+        """sync_to's body; the CALLER holds this store's WriterLease
+        (sync_everywhere's quiesce mode holds the whole fleet's leases
+        for the sync window and calls this directly)."""
+        self._require_ready()
+        dest = dest_path.rstrip("/")
+        clone = self.__class__(self.spark, dest)
+        prior = clone.snapshot_manifest()
+        if prior is None:
+            raise RuntimeError(
+                f"sync_to(): {dest} has no snapshot attestation — sync "
+                "only updates a completed snapshot_to() clone; take a "
+                "full snapshot first"
+            )
+        self._settle()
+        # identity gate: the manifest records which store the clone was
+        # exported from — unit-id overlap alone is not an identity
+        # (batch ids are small sequential ints, "bootstrap" is a
+        # universal delta_id), and without it a sync would silently
+        # merge two unrelated corpora (round-12 ADVICE, medium)
+        recorded = prior.get("source")
+        if recorded != self.base_path:
+            raise RuntimeError(
+                f"sync_to(): the clone at {dest} was exported from "
+                f"{recorded!r}, not from {self.base_path} — syncing "
+                "into another store's clone would merge unrelated "
+                "corpora. Snapshot THIS store to a fresh path (or "
+                "sync from the recorded source)."
+            )
+        self._tombstone_narrowing_gate(prior, dest)
+        ahead = self._retention_ahead(clone)
+        if ahead:
+            raise RuntimeError(
+                f"sync_to(): the clone at {dest} retired history the "
+                f"source {self.base_path} still holds ({ahead}) — its "
+                "retention is ahead, so shipped units would be dropped "
+                "on arrival or resurrect retired data while the sync "
+                "attested them. Expire the source to the clone's "
+                "boundary first, or take a fresh snapshot."
+            )
+        fields, receipt = self._ship_missing(clone, prior)
+        fids = self._tombstone_fingerprints()
+        for fid in sorted(fids):
+            clone.forget(
+                self.spark.read.parquet(
+                    f"{self.deleted_path}/forget_id={fid}"
+                ).select(self.TOMBSTONE_KEY),
+                fid,
+            )
+        manifest = {
+            "source": self.base_path,
+            **fields,
+            "tombstones_applied": [],
+            "tombstones_mirrored": sorted(fids),
+            "tombstone_fingerprints": fids,
+            "high_water": self.high_water(),
+        }
+        clone._write_json(f"{dest}/_snapshot.json", manifest)
+        return {**manifest, "dest": dest, **receipt}
+
+    def _settle(self) -> None:
+        """Bring the source to a clean state under its lease before an
+        export or a sync: the layout's crash recovery (maintenance
+        swaps, folds, expiries a previous call died inside of), the
+        fold-source vacuum sweep, and a tombstone re-list."""
+        self._recover()
+        self._vacuum_sweep()
+        self._deleted_cache = _UNSET
+
+    def _retention_ahead(self, clone):
+        """A description of the history the clone's retention retired
+        while the source still holds it, or None. Default: the
+        `_expired.json` floor the batch and seq layouts keep. (The
+        reverse direction — source expired, clone still holds —
+        surfaces as the layout's foreign-history refusal.)"""
+        src, cl = (
+            None if led is None else int(led["before"])
+            for led in (
+                self._read_json(self.expired_ledger_path),
+                clone._read_json(clone.expired_ledger_path),
+            )
+        )
+        if cl is not None and (src is None or cl > src):
+            return f"retention floor {cl}, the source's {src}"
+        return None
+
+    def _export_counted(self, df: DataFrame, dst: str, parts, schema) -> int:
+        """Land one export relation at `dst`, partitioned by `parts`,
+        and return its verified row count. One pass: an Observation on
+        the write counts the exported rows (no separate count job
+        re-running the masked read); a read-back count of what LANDED
+        verifies the write, and a mismatch raises before the caller
+        flips any clone marker. A fully-masked export writes no files;
+        the directory is still created so the clone's schema-pinned
+        reads resolve as empty."""
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        (
+            df.observe(obs, F.count(F.lit(1)).alias("n"))
+            .hint("rebalance", *parts)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy(*parts)
+            .parquet(dst)
+        )
+        expected = observed_count(obs)
+        fs, HPath = self._fs_for(dst)
+        fs.mkdirs(HPath(dst))
+        got = self.spark.read.schema(schema).parquet(dst).count()
+        if got != expected:
+            raise IOError(
+                f"snapshot row mismatch exporting {self.base_path} -> "
+                f"{dst}: expected {expected}, staged {got}; the "
+                "destination is incomplete (unreadable, unattested) — "
+                "delete it and snapshot again"
+            )
+        return got
+
+    def _ship(self, stale_dirs, df: DataFrame | None, dst: str, parts) -> None:
+        """Sync's one landing primitive: DELETE the clone's existing
+        directories of the shipped units first, then land `df` (None:
+        nothing to land) with dynamic partition overwrite. Overwrite
+        alone is not a true replace — it only replaces the partitions
+        the NEW content writes, so a crashed attempt's partial (or a
+        re-delivered unit's stale) partition whose rows were since
+        forgotten would keep serving those bytes under the committed
+        marker (round-12 ADVICE, low)."""
+        fs, HPath = self._fs_for(dst)
+        for d in stale_dirs:
+            fs.delete(HPath(d), True)
+        if df is not None:
+            (
+                df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(*parts)
+                .parquet(dst)
+            )
+
 
 class BatchAppendStore(StoreKernel):
     """Micro-batch-append store: the layout the streaming index-
@@ -784,31 +1063,32 @@ class BatchAppendStore(StoreKernel):
         self._unmark_landed(self.intent_path, str(int(bid)))
         return True
 
+    def _batch_partition_dirs(self, bid: int) -> list:
+        """Every existing (*CELL_COLS, batch_id=bid) leaf partition
+        directory. O(cells) metadata ops."""
+        fs, HPath = self._fs()
+        level = [self.data_path]
+        for col in self.CELL_COLS:
+            level = [
+                st.getPath().toString()
+                for d in level
+                if fs.exists(HPath(d))
+                for st in fs.listStatus(HPath(d))
+                if st.isDirectory()
+                and st.getPath().getName().startswith(f"{col}=")
+            ]
+        leaves = (f"{d}/batch_id={int(bid)}" for d in level)
+        return [p for p in leaves if fs.exists(HPath(p))]
+
     def _delete_batch_partitions(self, bid: int) -> None:
         """Delete every (*CELL_COLS, batch_id=bid) leaf partition —
         the explicit pre-delete used where dynamic overwrite alone is
-        not a true replace (a retry/re-ship whose new content writes
-        FEWER partitions than the stale attempt would leave the
-        difference's bytes serving). O(cells) metadata ops."""
+        not a true replace (a retry whose new content writes FEWER
+        partitions than the stale attempt would leave the difference's
+        bytes serving)."""
         fs, HPath = self._fs()
-
-        def _walk(path: str, depth: int) -> None:
-            if depth == 0:
-                p = HPath(f"{path}/batch_id={int(bid)}")
-                if fs.exists(p):
-                    fs.delete(p, True)
-                return
-            root = HPath(path)
-            if not fs.exists(root):
-                return
-            col = self.CELL_COLS[len(self.CELL_COLS) - depth]
-            for st in fs.listStatus(root):
-                if st.isDirectory() and st.getPath().getName().startswith(
-                    f"{col}="
-                ):
-                    _walk(st.getPath().toString(), depth - 1)
-
-        _walk(self.data_path, len(self.CELL_COLS))
+        for p in self._batch_partition_dirs(bid):
+            fs.delete(HPath(p), True)
 
     def _bootstrap_extra_paths(self) -> tuple:
         """Subclass maintenance state a (re)bootstrap must also clear
@@ -1621,53 +1901,6 @@ class BatchAppendStore(StoreKernel):
             expired = self._apply_expiry()
             return {"expired": expired, "before": before}
 
-    def snapshot_to(self, dest_path: str, pin_batch: int | None = None) -> dict:
-        """Export a consistent, compliance-clean CLONE of the store to
-        a fresh path — the disaster-recovery / fork surface on the
-        batch-store layout.
-
-        What travels: every COMMITTED batch (in-flight/crashed appends
-        are excluded exactly as reads exclude them), the (*CELL_COLS,
-        batch_id) partitioning (probe pruning and time travel work on
-        the clone), and the trained auxiliary relation (`_aux_swap()`'s
-        live side — centroids / codebook) so the clone serves and
-        appends under the same geometry. What does NOT travel:
-        tombstoned rows' BYTES — the export rewrites the data through
-        the tombstone anti-join, so a clone of a store with standing
-        takedowns is clean at the byte level (you cannot "back up" data
-        you were ordered to erase), and the clone starts with no
-        tombstones. A forget() landing on the source AFTER the snapshot
-        does not propagate: clones are forks — route takedowns through
-        `operators.takedown.forget_everywhere` with every live clone
-        listed.
-
-        Crash story (the store discipline, applied to the export):
-        intent markers for every batch land at the destination FIRST,
-        so a crash mid-copy leaves a clone whose reads resolve EMPTY;
-        the landed markers flip only after a counted verify of the
-        staged rows; the `_snapshot.json` manifest is written LAST and
-        is the completeness attestation (`snapshot_manifest()` — a
-        restore should require it). Recovery from a failed attempt is
-        "delete the destination, snapshot again" (the destination must
-        be fresh). Runs under the SOURCE WriterLease: a snapshot never
-        races a retrain/purge into capturing a half-migrated state.
-        Cost: one masked scan + one write of the committed data, plus
-        a count on each side for the verify.
-
-        `pin_batch=B` exports the store AS OF batch B — only committed
-        values at or below the pin travel (a generation travels only
-        when its WHOLE fold set is <= B; a pin falling inside one
-        refuses — fold boundaries bound the pinnable points, exactly
-        like as-of reads). The pin is what makes a CONSISTENT fleet
-        snapshot possible WITHOUT quiescing: stores fed by the same
-        stream pin at the same coordinate while appends beyond it
-        continue (round-13 verdict, missing #3;
-        `snapshot_everywhere(pin_batches=True)`)."""
-        from .lease import WriterLease
-
-        with WriterLease(self.spark, self.base_path):
-            return self._snapshot_locked(dest_path, pin_batch=pin_batch)
-
     def high_water(self) -> dict:
         """The store's last-committed position, in its own coordinate
         system — what a fleet backup catalog records per store so a
@@ -1678,24 +1911,20 @@ class BatchAppendStore(StoreKernel):
         hist = self.history()
         return {"kind": "batch", "value": (hist[-1] if hist else None)}
 
-    def _snapshot_locked(
-        self, dest_path: str, pin_batch: int | None = None
-    ) -> dict:
-        """snapshot_to's body; the CALLER holds this store's
-        WriterLease (snapshot_everywhere's quiesce mode holds the whole
-        fleet's leases for the export window and calls this directly —
-        the lease is not re-entrant, so the public wrapper cannot be
-        used there)."""
-        dest = dest_path.rstrip("/")
-        self._require_fresh_dest(dest)
-        clone = self.__class__(self.spark, dest)
-        self._recover()  # roll a crashed maintenance swap forward
-        self._vacuum_sweep()
-        self._deleted_cache = _UNSET  # re-list under the lease
+    def _export(self, clone, pin_batch) -> dict:
+        """snapshot_to on the batch layout. The clone gets every
+        committed batch (or, pinned, every value at or below the pin)
+        with its (*CELL_COLS, batch_id) partitioning, the live trained
+        auxiliary relation (`_aux_swap()` — centroids / codebook), the
+        fold ledger (trimmed to the shipped generations when pinned),
+        the evolved-schema sidecar and the retention floor. Intent
+        markers for every batch land FIRST, so a crash mid-copy leaves
+        a clone whose reads resolve EMPTY; the landed markers flip only
+        after the counted verify."""
         # RAW landed values: after a compact the write log includes
-        # the negative generation value, which the export must
-        # carry verbatim (history()'s mapped view would exclude
-        # the generation's rows from the isin pin below)
+        # the negative generation value, which the export must carry
+        # verbatim (history()'s mapped view would exclude the
+        # generation's rows from the isin pin below)
         hist = self._landed_batch_values()
         if not hist:
             raise RuntimeError(
@@ -1735,134 +1964,84 @@ class BatchAppendStore(StoreKernel):
                     f"{self.base_path}"
                 )
             hist = sel
-        fid_map = self._tombstone_fingerprints()
-        fids = sorted(fid_map)
-        # pin the export to the batch set listed above: a
-        # CONCURRENT unfenced append (or a redelivery of a crashed
-        # batch) landing partitions mid-scan must not leak rows
-        # into the clone — on the clone they would carry no intent
-        # marker and therefore be VISIBLE under a batch the clone
-        # never committed. The ComponentStore/MinHash exports pin
-        # their partition lists the same way (isin(marked)).
+        # pin the export to the batch set listed above: a CONCURRENT
+        # unfenced append (or a redelivery of a crashed batch) landing
+        # partitions mid-scan must not leak rows into the clone — there
+        # they would carry no intent marker and therefore be VISIBLE
+        # under a batch the clone never committed
         masked = self.read().filter(
             F.col("batch_id").isin([int(b) for b in hist])
         )
         for b in hist:
             clone._mark_landed(clone.intent_path, str(b))
-        # One pass instead of two: the export used to run the masked
-        # read TWICE — once for `expected = masked.count()`, once for
-        # the write (guide §1.2: don't compute things you throw away).
-        # An Observation on the write counts the exported rows in the
-        # same job; the read-back count below still verifies that what
-        # LANDED is complete and readable, which is the failure mode
-        # this check exists for.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        (
-            self._rebalanced(masked.observe(obs, F.count(F.lit(1)).alias("n")))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(*self.CELL_COLS, "batch_id")
-            .parquet(clone.data_path)
+        rows = self._export_counted(
+            masked,
+            clone.data_path,
+            [*self.CELL_COLS, "batch_id"],
+            self.data_schema(),
         )
-        expected = observed_count(obs)
-        # a fully-masked export writes no files; the dir must still
-        # exist so the clone's schema-pinned reads resolve as empty
-        dfs, DP = self._fs_for(clone.data_path)
-        dfs.mkdirs(DP(clone.data_path))
-        got = (
-            self.spark.read.schema(self.data_schema())
-            .parquet(clone.data_path)
-            .count()
-        )
-        if got != expected:
-            raise IOError(
-                f"snapshot row mismatch exporting {self.base_path} "
-                f"-> {dest}: expected {expected}, staged {got}; the "
-                "destination is incomplete (no landed markers) — "
-                "delete it and snapshot again"
-            )
         aux = self._aux_swap()
         if aux is not None:
-            live = aux[1]
             sfs, SP = self._fs()
-            if sfs.exists(SP(live)):
-                rel = live[len(self.base_path) + 1:]
-                self._copy_tree(live, f"{dest}/{rel}")
-        # the fold ledger travels: the clone must refuse as-of
-        # reads inside the folded prefix and drop redeliveries of
-        # folded batches, exactly like the source. A PINNED export
-        # carries a TRIMMED ledger — only the generations that
-        # shipped (a redelivery of a beyond-pin folded batch is a
-        # legitimate new batch on the fork)
+            if sfs.exists(SP(aux[1])):
+                rel = aux[1][len(self.base_path) + 1:]
+                self._copy_tree(aux[1], f"{clone.base_path}/{rel}")
+        # the fold ledger travels: the clone must refuse as-of reads
+        # inside the folded prefix and drop redeliveries of folded
+        # batches, exactly like the source. A PINNED export carries a
+        # TRIMMED ledger — only the generations that shipped (a
+        # redelivery of a beyond-pin folded batch is a legitimate new
+        # batch on the fork)
         led = self._read_json(self.folded_ledger_path)
         if led is not None and pinned_gens is not None:
-            if pinned_gens:
-                led = {
-                    "gen": min(g["gen"] for g in pinned_gens),
-                    "upto": max(g["upto"] for g in pinned_gens),
-                    "batches": sorted(
-                        {b for g in pinned_gens for b in g["batches"]}
-                    ),
-                    "generations": sorted(
-                        pinned_gens, key=lambda g: g["gen"]
-                    ),
-                }
-            else:
-                led = None
-        if led is not None:
-            clone._write_json(clone.folded_ledger_path, led)
-        # the evolved-schema sidecar travels: the clone's append
-        # guard must validate producers against the schema the
-        # exported rows carry
-        sch = self._read_json(self.schema_sidecar_path)
-        if sch is not None:
-            clone._write_json(clone.schema_sidecar_path, sch)
-        # the retention floor travels: the clone refuses the same
-        # expired redeliveries and as-of points as the source
-        exp = self._read_json(self.expired_ledger_path)
-        if exp is not None:
-            clone._write_json(clone.expired_ledger_path, exp)
+            led = {
+                "gen": min(g["gen"] for g in pinned_gens),
+                "upto": max(g["upto"] for g in pinned_gens),
+                "batches": sorted(
+                    {b for g in pinned_gens for b in g["batches"]}
+                ),
+                "generations": sorted(pinned_gens, key=lambda g: g["gen"]),
+            } if pinned_gens else None
+        # the evolved schema (the clone's append guard validates
+        # producers against it) and the retention floor (the clone
+        # refuses the same expired redeliveries and as-of points)
+        # travel with it
+        for path, obj in (
+            (clone.folded_ledger_path, led),
+            (clone.schema_sidecar_path,
+             self._read_json(self.schema_sidecar_path)),
+            (clone.expired_ledger_path,
+             self._read_json(self.expired_ledger_path)),
+        ):
+            if obj is not None:
+                clone._write_json(path, obj)
         for b in hist:
             clone._mark_landed(clone.landed_path, str(b))
             clone._unmark_landed(clone.intent_path, str(b))
-        if pinned_gens is None:
-            hw = self.high_water()
-        else:
+        out = {
+            "batches": hist,
+            "rows": rows,
+            "pin_batch": None if pin_batch is None else int(pin_batch),
+            # geometry generation stamps: sync_to refuses when either
+            # side's trained aux (centroids/codebook) moved since this
+            # export — a retrain migrates EVERY landed row, so shipping
+            # batches across generations would mix geometries silently
+            "aux_fp_source": self._aux_live_fp(),
+            "aux_fp_clone": clone._aux_live_fp(),
+        }
+        if pinned_gens is not None:
             # the pinned export's position is the highest committed
-            # point that SHIPPED — on a common-pin fleet snapshot
-            # every batch store records the same value, so the
-            # catalog's skew check proves the set single-point
+            # point that SHIPPED — on a common-pin fleet snapshot every
+            # batch store records the same value, so the catalog's skew
+            # check proves the set single-point
             gens_by_id = {g["gen"]: g for g in pinned_gens}
-            hw = {
+            out["high_water"] = {
                 "kind": "batch",
                 "value": max(
                     (gens_by_id[v]["upto"] if v < 0 else v) for v in hist
                 ),
             }
-        manifest = {
-            "source": self.base_path,
-            "batches": hist,
-            "rows": got,
-            "tombstones_applied": fids,
-            "tombstone_fingerprints": fid_map,
-            # last committed position under the source lease — fleet
-            # catalogs record this so a restore can surface cross-store
-            # skew (round-12 verdict, next #3). For a pinned export:
-            # the pinned point (see above)
-            "high_water": hw,
-            "pin_batch": None if pin_batch is None else int(pin_batch),
-            # geometry generation stamps: sync_to refuses when
-            # either side's trained aux (centroids/codebook) moved
-            # since this export — a retrain migrates EVERY landed
-            # row, so shipping pre/post-retrain batches across
-            # generations would mix geometries silently
-            "aux_fp_source": self._aux_live_fp(),
-            "aux_fp_clone": clone._aux_live_fp(),
-        }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {**manifest, "dest": dest}
+        return out
 
     def _aux_live_fp(self):
         """Content fingerprint of the live auxiliary relation (trained
@@ -1877,63 +2056,19 @@ class BatchAppendStore(StoreKernel):
             return None
         return self._partition_fingerprint(live)
 
-    def sync_to(self, dest_path: str) -> dict:
-        """INCREMENTAL backup: bring a previously-exported clone up to
-        date without re-exporting the corpus. Ships only the committed
-        batches the clone lacks (each through the clone's own
-        `append_batch`, so the landing is marker-gated and a crashed
-        sync re-runs to completion — missing batches are recomputed
-        from the diff, partially-landed ones replaced), MIRRORS the
-        source's standing tombstones onto the clone per forget_id
-        (idempotent-by-replacement, so retried syncs re-land them
-        harmlessly), refreshes the trained auxiliary relation, and
-        rewrites the manifest LAST with the new attested history.
-
-        Two honesty bounds, both documented consequences of the
-        snapshot model: newly-shipped batches are still exported
-        through the tombstone anti-join (no forgotten bytes travel in
-        the sync), but rows forgotten on the source AFTER the original
-        snapshot already sit in the clone's OLD batches as bytes — the
-        mirrored tombstones mask them immediately and the clone's own
-        `purge_forgotten()` erases them; a sync is therefore
-        "compliance-masked now, byte-clean at the clone's next purge",
-        where a fresh snapshot is byte-clean at once. Corollary: a
-        source-side purge_forgotten() BEFORE a sync clears the very
-        tombstones the sync would have mirrored, so the clone keeps
-        serving rows the source already erased — syncs cannot
-        reconstruct an erasure whose id list is gone. This is the
-        standing takedown contract, not a sync special case: route
-        forgets through `forget_everywhere` with every live clone
-        listed (each clone then purges itself), or purge the source
-        only after its clones are synced. And the clone
-        must genuinely be a clone: a destination without a snapshot
-        manifest, or with committed batches the source never had, is
-        refused — syncing into an unrelated store is not a defined
-        operation. Runs under the SOURCE WriterLease, like snapshot_to.
-
-        Cost: O(missing batches) data + O(|tombstones|) metadata — the
-        steady-state nightly-backup shape; snapshot_to is the full
-        backup it increments."""
-        from .lease import WriterLease
-        with WriterLease(self.spark, self.base_path):
-            return self._sync_locked(dest_path)
-
-    def _sync_locked(self, dest_path: str) -> dict:
-        """sync_to's body; the CALLER holds this store's
-        WriterLease (sync_everywhere's quiesce mode holds the whole
-        fleet's leases for the sync window and calls this directly —
-        the lease is not re-entrant)."""
-        dest = dest_path.rstrip("/")
-        clone = self.__class__(self.spark, dest)
-        if clone.snapshot_manifest() is None:
-            raise RuntimeError(
-                f"sync_to(): {dest} has no snapshot attestation — sync "
-                "only updates a completed snapshot_to() clone; take a "
-                "full snapshot first"
-            )
-        self._recover()
-        self._vacuum_sweep()
-        self._deleted_cache = _UNSET
+    def _ship_missing(self, clone, prior) -> tuple:
+        """sync_to on the batch layout: each committed batch the clone
+        lacks ships through the marker discipline of `append_batch`
+        (intent, pre-delete + dynamic overwrite, landed marker). The
+        trained auxiliary relation needs no refresh: the geometry gate
+        proves both sides still sit on the fingerprinted generations.
+        Refuses, before any clone mutation, a clone that diverged:
+        committed batches the source never landed, same-id generations
+        with different fold membership, source generations the clone
+        lacks (a fold is not incrementally shippable), a retrain on
+        either side, or a schema that is not an additive prefix of the
+        source's (a source evolve_schema() carries over)."""
+        dest = clone.base_path
         # RAW landed values on both sides: the diff must see the
         # generation partitions themselves, not history()'s mapped
         # view — a source compact() since the snapshot shows up as
@@ -1941,49 +2076,6 @@ class BatchAppendStore(StoreKernel):
         # carries, and refuses below with the fresh-snapshot remedy
         hist = self._landed_batch_values()
         have = clone._landed_batch_values()
-        # identity gate FIRST: the manifest records which store the
-        # clone was exported from. A batch-id subset test alone is
-        # not an identity — batch ids are small sequential ints, so
-        # a clone of unrelated store B (batches [0]) passes the
-        # foreign check against any source, and for untrained
-        # stores the aux-fingerprint gate can't catch it either:
-        # the sync would silently merge two unrelated corpora
-        # (round-12 ADVICE, medium).
-        prior = clone.snapshot_manifest()
-        recorded = prior.get("source")
-        if recorded != self.base_path:
-            raise RuntimeError(
-                f"sync_to(): the clone at {dest} was exported from "
-                f"{recorded!r}, not from {self.base_path} — syncing "
-                "into another store's clone would merge unrelated "
-                "corpora. Snapshot THIS store to a fresh path (or "
-                "sync from the recorded source)."
-            )
-        self._tombstone_narrowing_gate(prior, dest)
-        # retention-floor gate (round-13 ADVICE, low): a clone whose
-        # `_expired.json` floor is AHEAD of the source's would silently
-        # re-drop every shipped batch below its floor (append_batch's
-        # redelivery refusal) while the manifest attested them as held
-        # — and every future sync would re-ship and re-drop them. The
-        # reverse direction is already covered: a SOURCE expire() ahead
-        # of the clone surfaces as foreign clone batches below.
-        src_exp = self._read_json(self.expired_ledger_path)
-        clone_exp = clone._read_json(clone.expired_ledger_path)
-        src_floor = int(src_exp["before"]) if src_exp is not None else None
-        clone_floor = (
-            int(clone_exp["before"]) if clone_exp is not None else None
-        )
-        if clone_floor is not None and (
-            src_floor is None or clone_floor > src_floor
-        ):
-            raise RuntimeError(
-                f"sync_to(): the clone at {dest} has a retention floor "
-                f"({clone_floor}) ahead of the source's "
-                f"({src_floor}) — batches the source still holds would "
-                "be silently dropped on arrival while the sync "
-                "attested them as shipped. Expire the source to the "
-                "clone's boundary first, or take a fresh snapshot."
-            )
         foreign = sorted(set(have) - set(hist))
         if foreign:
             raise RuntimeError(
@@ -1999,10 +2091,8 @@ class BatchAppendStore(StoreKernel):
             )
         # generation-membership gate (round-14 self-review): tiered
         # folds make SAME-ID generations with DIFFERENT fold sets
-        # reachable (the clone compacts itself with other boundaries;
-        # both counters count down from the shipped ledger), and the
-        # landed-value diff alone would attest them as in-sync while
-        # the rows diverge silently.
+        # reachable, and the landed-value diff alone would attest them
+        # as in-sync while the rows diverge silently
         src_gens = {g["gen"]: g["batches"] for g in self._fold_generations()}
         clone_gens = {
             g["gen"]: g["batches"] for g in clone._fold_generations()
@@ -2025,15 +2115,10 @@ class BatchAppendStore(StoreKernel):
         neg = [v for v in missing if v < 0]
         if neg:
             # a source compact() since the last export folded POST-
-            # snapshot batches the clone never saw (pre-snapshot folds
-            # surface as foreign clone batches above) — generations
-            # cannot ship through append_batch (negative ids are
-            # reserved), and shipping one without replaying the whole
-            # fold protocol on the clone would leave a crash window
-            # serving the folded rows twice. Checked BEFORE any clone
-            # mutation below — a refused sync must leave the clone
-            # untouched (round-14 self-review: the schema sidecar
-            # write used to precede this).
+            # snapshot batches the clone never saw — shipping a
+            # generation without replaying the whole fold protocol on
+            # the clone would leave a crash window serving the folded
+            # rows twice
             raise RuntimeError(
                 f"sync_to(): the source {self.base_path} folded "
                 f"batches into generation(s) {neg} the clone at "
@@ -2041,22 +2126,14 @@ class BatchAppendStore(StoreKernel):
                 "shippable. Take a fresh snapshot (or sync before "
                 "compacting the source)."
             )
-        # geometry-generation gate: a retrain on EITHER side since
-        # the last export migrated every landed row to a new
-        # centroid/codebook geometry the other side doesn't have —
-        # shipping batches across that line would mix geometries
-        # silently (probes prune wrong cells, codes decode against
-        # the wrong codebook). The manifest's aux fingerprints are
-        # the generation stamps; batch history can't see this
-        # (retrain preserves it by design).
+        # geometry-generation gate: a retrain on EITHER side since the
+        # last export migrated every landed row to a geometry the other
+        # side doesn't have; the manifest's aux fingerprints are the
+        # generation stamps (batch history can't see a retrain)
         if "aux_fp_source" not in prior and (
             self._aux_live_fp() is not None
             or clone._aux_live_fp() is not None
         ):
-            # a manifest from before the generation stamps existed
-            # cannot prove the trained geometries ever matched —
-            # refusing with the honest reason beats either blindly
-            # trusting it or misdiagnosing it as a retrain
             raise RuntimeError(
                 f"sync_to(): the manifest at {dest} predates the "
                 "geometry-generation stamps and at least one side "
@@ -2078,28 +2155,19 @@ class BatchAppendStore(StoreKernel):
                 "is a fork, not a replica. Take a fresh snapshot "
                 "(or stop syncing this fork)."
             )
-        # schema-generation reconciliation (round-12 verdict, next
-        # #4): a source evolve_schema() since the snapshot means
-        # the batches about to ship carry columns the clone's
-        # pinned reads would silently DROP — carry the evolved
-        # sidecar to the clone first (additive evolution is
-        # backwards-compatible by construction: the clone's old
-        # batches null-fill). A clone whose schema is NOT an
-        # additive prefix of the source's evolved independently —
-        # that is a fork, refuse.
+        # schema-generation reconciliation: a source evolve_schema()
+        # since the snapshot carries over (additive evolution is
+        # backwards-compatible: the clone's old batches null-fill); a
+        # clone schema that is not an additive prefix evolved on its own
         src_schema = self.data_schema()
         clone_schema = clone.data_schema()
-        schema_evolved = False
-        if src_schema != clone_schema:
+        schema_evolved = src_schema != clone_schema
+        if schema_evolved:
             src_types = {f.name: f.dataType for f in src_schema.fields}
-            clone_types = {
-                f.name: f.dataType for f in clone_schema.fields
-            }
-            additive = all(
-                n in src_types and src_types[n] == t
-                for n, t in clone_types.items()
-            )
-            if not additive:
+            if any(
+                src_types.get(f.name) != f.dataType
+                for f in clone_schema.fields
+            ):
                 raise RuntimeError(
                     f"sync_to(): the clone at {dest} carries a "
                     "schema that is not an additive prefix of the "
@@ -2110,57 +2178,29 @@ class BatchAppendStore(StoreKernel):
             clone._write_json(
                 clone.schema_sidecar_path, src_schema.jsonValue()
             )
-            schema_evolved = True
         masked = self.read()
         for bid in missing:
-            # pre-delete the clone's existing partitions for this
-            # batch (the MinHash _ship discipline): a PRIOR crashed
-            # sync attempt may have landed partial partitions, and
-            # append_batch's dynamic overwrite only replaces the
-            # partitions the NEW content writes — a cell whose
-            # surviving rows are now empty (its rows were forgotten
-            # on the source between the attempts) would keep the
-            # stale attempt's forgotten bytes visible under the
-            # committed marker (round-12 ADVICE, low)
-            clone._delete_batch_partitions(bid)
-            clone.append_batch(
-                masked.filter(F.col("batch_id") == bid).drop("batch_id"),
-                bid,
+            clone._mark_landed(clone.intent_path, str(bid))
+            self._ship(
+                clone._batch_partition_dirs(bid),
+                self._rebalanced(masked.filter(F.col("batch_id") == bid)),
+                clone.data_path,
+                [*self.CELL_COLS, "batch_id"],
             )
-        fids = self._tombstone_fingerprints()
-        for fid in sorted(fids):
-            ids = self.spark.read.parquet(
-                f"{self.deleted_path}/forget_id={fid}"
-            ).select(self.TOMBSTONE_KEY)
-            clone.forget(ids, fid)
-        # no aux refresh: the geometry gate above just proved both
-        # sides still sit on the fingerprinted generations, so the
-        # clone's aux IS current by construction
-        manifest = {
-            "source": self.base_path,
-            "batches": hist,
-            # same meaning as snapshot_to's "rows": raw rows under
-            # committed markers on the clone (a fresh clone holds
-            # no tombstones, so the export's masked count IS its
-            # raw count) — NOT the tombstone-masked serving view,
-            # which would give the one attestation field two
-            # meanings depending on which writer last touched the
-            # manifest (round-12 ADVICE, low)
-            "rows": clone._data_read().count(),
-            "tombstones_applied": [],
-            "tombstones_mirrored": sorted(fids),
-            "tombstone_fingerprints": fids,
-            "aux_fp_source": prior.get("aux_fp_source"),
-            "aux_fp_clone": prior.get("aux_fp_clone"),
-            "high_water": self.high_water(),
-        }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {
-            **manifest,
-            "dest": dest,
-            "batches_shipped": missing,
-            "schema_evolved": schema_evolved,
-        }
+            clone._mark_landed(clone.landed_path, str(bid))
+            clone._unmark_landed(clone.intent_path, str(bid))
+        return (
+            {
+                "batches": hist,
+                # same meaning as snapshot_to's "rows": raw rows under
+                # committed markers on the clone — NOT the masked
+                # serving view (round-12 ADVICE, low)
+                "rows": clone._data_read().count(),
+                "aux_fp_source": prior.get("aux_fp_source"),
+                "aux_fp_clone": prior.get("aux_fp_clone"),
+            },
+            {"batches_shipped": missing, "schema_evolved": schema_evolved},
+        )
 
     def purge_forgotten(self) -> dict:
         """Byte-erase tombstoned rows from the leaf partitions that
